@@ -517,8 +517,8 @@ def warm_up(spark, sf_dir: str) -> None:
         cent90_two_level_layout, kmeans_two_level_layout,
     )
 
-    for frame in (*kmeans_two_level_layout(spark, sf_dir),
-                  *cent90_two_level_layout(spark, sf_dir)):
+    for frame in (kmeans_two_level_layout(spark, sf_dir),
+                  cent90_two_level_layout(spark, sf_dir)):
         frame.limit(1).count()
 
 

@@ -1,56 +1,20 @@
-"""Arrow-batched (pandas_udf) vector kernels — the Python-side twin of
-functions/vectors.py, for stages where the interpreted JVM
-higher-order-function fold is the measured bottleneck.
+"""Arrow-batched (applyInPandas) vector kernels — the Python-side twin
+of functions/vectors.py, for stages where a vectorized numpy/BLAS pass
+beats the interpreted JVM higher-order-function fold.
 
-NO ``from __future__ import annotations`` here: pandas_udf resolves its
-return type from the REAL evaluated hints, and stringified hints break
-that resolution (documented Spark pitfall).
+``cell_prefilter_pairs`` is the candidate stage of every IVF embedding
+dedup route; the exact verify behind it stays the JVM ordered fold
+(functions/vectors.dot), whose FP operation order matches the DuckDB
+oracle's ``list_sum`` bit-for-bit. The round-7 Arrow verify kernel
+that re-implemented that fold in numpy lost 1.7x at 30x candidate
+volume and was deleted; the fold it mirrored is the only verify.
 
-Determinism contract: ``dot_arrow`` accumulates LEFT-TO-RIGHT over the
-dimension axis in float64 — one vectorized numpy add per dimension —
-which performs the exact same FP operation sequence per pair as the
-JVM ``aggregate(zip_with(...))`` fold and as the DuckDB oracle's
-``list_sum`` (also an ordered fold). The three engines therefore agree
-bit-for-bit, so swapping this kernel in or out of a hash-gated query
-cannot flip a 4-decimal rounding. (``np.einsum``/``np.dot`` would be
-faster but use pairwise/blocked summation — a different FP order.)
+NO ``from __future__ import annotations`` here (Arrow-facing modules
+keep real annotation objects by repo convention).
 """
 
 import numpy as np
 import pandas as pd
-
-from pyspark.sql import Column
-from pyspark.sql.functions import pandas_udf
-
-
-@pandas_udf("double")
-def _dot_fold(va: pd.Series, vb: pd.Series) -> pd.Series:
-    if len(va) == 0:
-        return pd.Series(np.zeros(0))
-    a = np.stack(va.to_numpy()).astype(np.float64, copy=False)
-    b = np.stack(vb.to_numpy()).astype(np.float64, copy=False)
-    acc = np.zeros(a.shape[0])
-    for j in range(a.shape[1]):  # left-to-right: fold-identical
-        acc += a[:, j] * b[:, j]
-    return pd.Series(acc)
-
-
-def dot_arrow(a: Column, b: Column) -> Column:
-    """Arrow-batched ordered-fold dot product: bit-identical to
-    functions/vectors.dot, evaluated in numpy over Arrow record
-    batches instead of the JVM HOF interpreter. Worth it only when
-    the per-pair fold dominates the stage (measured: ~break-even at
-    sf0.1 local where serialization competes with idle cores — see
-    README 'JVM vs Arrow' for the measured trade at 1x and 30x).
-
-    Precondition: both inputs are NON-NULL, fixed-dimension float
-    arrays (what every embedding pipeline here feeds it — vectors are
-    required columns of the embeddings table). A NULL vector raises
-    in np.stack and fails the task, where the JVM HOF fold would
-    yield NULL for that row; callers with nullable vectors must
-    filter first. Keeping the kernel null-free is what lets it stay
-    one vectorized add per dimension."""
-    return _dot_fold(a, b)
 
 
 def cell_prefilter_pairs(assigned, threshold, id_col="vec_id",
@@ -82,8 +46,8 @@ def cell_prefilter_pairs(assigned, threshold, id_col="vec_id",
     The GEMM is row-blocked (``block_rows``) so a skewed cell costs
     bounded memory (block x cell score matrix), and positions are
     mapped to ids with min/max so id_a < id_b holds regardless of
-    intra-cell order. Precondition (same as dot_arrow): vectors are
-    non-null fixed-dimension arrays.
+    intra-cell order. Precondition: vectors are non-null
+    fixed-dimension arrays (np.stack fails the task on a NULL).
     """
     thr = float(threshold) - 0.5e-4 - 1e-9
 

@@ -1,37 +1,27 @@
 """Vectorized MinHash signature kernel (Arrow ``mapInArrow``) — the
-STREAMING-side twin of operators/dedup.minhash_signatures.
+permute-and-min half of operators/dedup.minhash_signatures, and the
+only signature path: corpus queries, the stored index layouts and the
+streaming/incremental probes all run it.
 
-Which form wins is a partitioning question, measured in rounds 10 and
-14:
+Round 14 measured this kernel against the interpreted JVM
+higher-order-function fold it replaced: 7.5x faster on a 100x
+signature probe (20.2 s vs 152.7 s), a tie on the full sf0.1 pipeline
+(2.53 vs 2.58 s), and ~4 s vs 38 s on a 5,000-row streaming batch,
+where the 1-4 partitions of a micro-batch leave the JVM fold serial
+(README "JVM vs Arrow"). The JVM fold survives only as the
+integer-parity oracle in tests/test_winnow_kernel.py.
 
-- STREAMING micro-batches and incremental shards arrive as 1-4
-  partitions; the interpreted JVM fold runs serially there (measured:
-  a 5,000-row batch spent 38 s in the from-raw probe) while this
-  kernel's numpy reduction is vectorized PER CORE (same batch: ~4 s).
-  The streaming/incremental probes pass ``engine="arrow"``.
-- CORPUS-wide pipelines (dedup_minhash_lsh, the index layouts) scan
-  parquet with enough splits to saturate every core; round 10 measured
-  the then-mapInPandas kernel LOSING the 100x probe (10.3 s JVM vs
-  13.6 s kernel) and kept the JVM fold as their default. Round 14
-  rewrote the kernel as ``mapInArrow`` — no pandas materialization, no
-  per-row Python objects in or out (the list column is consumed as its
-  flat values buffer + offsets, signatures are emitted as one flat
-  buffer + arange offsets) — and re-ran both gates; see
-  scripts/mh_engine_ab_r14.py for the numbers that set the current
-  default.
-
-The kernel keeps the hashing JVM-side — ``xxhash64 & M31`` has no
-numpy twin — and moves only the permute-and-min to numpy: all
-documents' 31-bit shingle hashes in an Arrow batch form one flat
-uint64 vector, each permutation block is one broadcasted multiply-add
-+ mask (products < 2^62, uint64 exact; the mask equals the JVM
-bitwiseAND), and per-document minima come from
-``np.minimum.reduceat``. Signatures are INTEGER-IDENTICAL to the JVM
-form, including the null/empty-shingle degenerations (a null or empty
-hash array yields a 32-element all-NULL signature, exactly the JVM
-``transform(consts, .. array_min(nullable))`` value — pinned by
-tests/test_winnow_kernel.py::test_minhash_kernel_matches_jvm), so
-banding, layouts, and oracles never see which engine ran.
+The hashing stays JVM-side — ``xxhash64 & M31`` has no numpy twin —
+and only the permute-and-min moves to numpy: all documents' 31-bit
+shingle hashes in an Arrow batch form one flat uint64 vector, each
+permutation block is one broadcasted multiply-add + mask (products
+< 2^62, uint64 exact; the mask equals the JVM bitwiseAND), and
+per-document minima come from ``np.minimum.reduceat``. Signatures are
+INTEGER-IDENTICAL to the JVM form, including the null/empty-shingle
+degenerations (a null or empty hash array yields an n_perm-element
+all-NULL signature, exactly the JVM ``transform(consts, ..
+array_min(nullable))`` value), so banding, layouts, and oracles match
+the oracle fold.
 
 NOTE: no ``from __future__ import annotations`` here (Arrow-facing
 modules keep real annotation objects by repo convention).
@@ -44,45 +34,11 @@ _M31 = np.uint64((1 << 31) - 1)
 _CHUNK_HASHES = 131072
 
 
-def sig_batch(h31_arrays, a_consts, b_consts):
-    """Signatures for a batch of per-doc 31-bit hash arrays (list of
-    sequences / None). Returns a list aligned with the input: each
-    entry a list of n_perm ints, or ``[None]*n_perm`` for null/empty
-    inputs. Kept as the object-level reference implementation (the
-    mapInArrow path below is buffer-level); tests pin both against
-    the JVM fold."""
-    n_perm = len(a_consts)
-    out = [None] * len(h31_arrays)
-    lens, bufs, idx = [], [], []
-    for i, h in enumerate(h31_arrays):
-        if h is None:
-            out[i] = [None] * n_perm
-            continue
-        arr = np.asarray(h, dtype=np.uint64)
-        if arr.size == 0:
-            out[i] = [None] * n_perm
-            continue
-        idx.append(i)
-        bufs.append(arr)
-        lens.append(arr.size)
-    if not idx:
-        return out
-    flat = np.concatenate(bufs)
-    lens = np.asarray(lens, dtype=np.intp)
-    starts = np.zeros(lens.size, dtype=np.intp)
-    np.cumsum(lens[:-1], out=starts[1:])
-    mins = _permuted_minima(flat, starts, lens,
-                            np.asarray(a_consts, dtype=np.uint64),
-                            np.asarray(b_consts, dtype=np.uint64))
-    for j, i in enumerate(idx):
-        out[i] = mins[:, j].tolist()
-    return out
-
-
 def _permuted_minima(flat, starts, lens, A, B):
     """(n_perm, n_docs) int64 minima of (h*a+b)&M31 per doc segment.
     ``flat`` uint64 hashes, ``starts``/``lens`` absolute segment
-    bounds (all lens > 0). Documents are processed in chunks so the
+    bounds (all lens > 0, segments contiguous: starts[i+1] ==
+    starts[i] + lens[i]). Documents are processed in chunks so the
     (n_perm x hashes) block stays ~bounded."""
     n_perm = A.size
     n_docs = starts.size
@@ -106,68 +62,64 @@ def _permuted_minima(flat, starts, lens, A, B):
     return out
 
 
-def minhash_sigs_fast(hashed, a_consts, b_consts, keep_shingles):
-    """(doc_id[, shingles], sig) from a (doc_id[, shingles], h31)
-    frame — the Arrow half of minhash_signatures(engine="arrow").
+def _sign_batch(batch, A, B, keep_shingles):
+    """One Arrow record batch (doc_id[, shingles], h31) → (doc_id[,
+    shingles], sig). The h31 list column is consumed as a flat values
+    buffer (no per-row Python objects), and the signature column is
+    built as ONE flat int64 buffer with arange offsets.
 
-    mapInArrow (round 14): the h31 list column is consumed as its
-    flat int64 values buffer + offsets (no pandas, no per-row numpy
-    objects), and the signature column is built as ONE flat int64
-    buffer with arange offsets — per-row Python work is zero on both
-    sides of the boundary. Null/empty inputs yield 32-element
-    all-null signatures via the element validity mask (the exact JVM
-    value)."""
+    The hash buffer comes from ``flatten()``, which skips the spans
+    under null slots — the Arrow spec lets a null slot's offsets cover
+    garbage values, and reading them would fold that garbage into a
+    neighbour's minima. Segment starts are the cumulative lengths of
+    the slots that contribute values, so the segments are contiguous
+    by construction, as _permuted_minima requires. Null/empty inputs
+    yield all-null signatures via the element validity mask (the exact
+    JVM value)."""
     import pyarrow as pa
 
+    n_perm = A.size
+    col = batch.column(batch.schema.get_field_index("h31"))
+    n = len(col)
+    off = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
+    lens_all = off[1:] - off[:-1]
+    if col.null_count:
+        lens_all[~col.is_valid().to_numpy(zero_copy_only=False)] = 0
+    nonempty = lens_all > 0
+    sig_vals = np.empty(n * n_perm, dtype=np.int64)
+    if nonempty.any():
+        flat = col.flatten().to_numpy(zero_copy_only=False).astype(
+            np.uint64, copy=False)
+        lens = lens_all[nonempty].astype(np.intp)
+        starts = np.zeros(lens.size, dtype=np.intp)
+        np.cumsum(lens[:-1], out=starts[1:])
+        mins = _permuted_minima(flat, starts, lens, A, B)
+        pos = np.flatnonzero(nonempty)[:, None] * n_perm + \
+            np.arange(n_perm)[None, :]
+        sig_vals[pos.ravel()] = mins.T.ravel()
+    elem_null = np.repeat(~nonempty, n_perm)
+    sig = pa.ListArray.from_arrays(
+        pa.array(np.arange(0, (n + 1) * n_perm, n_perm, dtype=np.int32)),
+        pa.array(sig_vals, mask=elem_null),
+    )
+    names = ["doc_id", "shingles"] if keep_shingles else ["doc_id"]
+    arrays = [batch.column(batch.schema.get_field_index(c)) for c in names]
+    return pa.RecordBatch.from_arrays(arrays + [sig], names=names + ["sig"])
+
+
+def minhash_sigs_fast(hashed, a_consts, b_consts, keep_shingles):
+    """(doc_id[, shingles], sig) from a (doc_id[, shingles], h31)
+    frame via ``mapInArrow`` — per-row Python work is zero on both
+    sides of the boundary (see _sign_batch)."""
     A = np.asarray(a_consts, dtype=np.uint64)
     B = np.asarray(b_consts, dtype=np.uint64)
-    n_perm = A.size
     cols = "doc_id long, " + (
         "shingles array<string>, " if keep_shingles else ""
     ) + "sig array<long>"
 
     def gen(batches):
         for batch in batches:
-            col = batch.column(batch.schema.get_field_index("h31"))
-            n = len(col)
-            if n == 0:
-                continue
-            off = col.offsets.to_numpy(zero_copy_only=False).astype(
-                np.int64)
-            starts_all = off[:-1]
-            lens_all = off[1:] - off[:-1]
-            if col.null_count:
-                valid = col.is_valid().to_numpy(zero_copy_only=False)
-                nonempty = valid & (lens_all > 0)
-            else:
-                nonempty = lens_all > 0
-            sig_vals = np.empty(n * n_perm, dtype=np.int64)
-            if nonempty.any():
-                flat = col.values.to_numpy(zero_copy_only=False).astype(
-                    np.uint64, copy=False)
-                mins = _permuted_minima(
-                    flat,
-                    starts_all[nonempty].astype(np.intp),
-                    lens_all[nonempty].astype(np.intp),
-                    A, B,
-                )
-                pos = np.flatnonzero(nonempty)[:, None] * n_perm + \
-                    np.arange(n_perm)[None, :]
-                sig_vals[pos.ravel()] = mins.T.ravel()
-            elem_null = np.repeat(~nonempty, n_perm)
-            sig = pa.ListArray.from_arrays(
-                pa.array(np.arange(0, (n + 1) * n_perm, n_perm,
-                                   dtype=np.int32)),
-                pa.array(sig_vals, mask=elem_null),
-            )
-            arrays = [batch.column(batch.schema.get_field_index("doc_id"))]
-            names = ["doc_id"]
-            if keep_shingles:
-                arrays.append(batch.column(
-                    batch.schema.get_field_index("shingles")))
-                names.append("shingles")
-            arrays.append(sig)
-            names.append("sig")
-            yield pa.RecordBatch.from_arrays(arrays, names=names)
+            if batch.num_rows:
+                yield _sign_batch(batch, A, B, keep_shingles)
 
     return hashed.mapInArrow(gen, schema=cols)

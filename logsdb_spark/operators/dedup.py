@@ -1,7 +1,7 @@
 """Deduplication operators — *[extension]* (SURVEY §2.12), designed for
 100 TB corpora.
 
-Four tiers, all pure built-in expressions (no Python UDFs):
+Four tiers:
 
 1. exact          — md5-fingerprint groupBy (one shuffle on the hash)
 2. minhash + LSH  — char-shingle MinHash signatures, banded LSH
@@ -11,7 +11,7 @@ Four tiers, all pure built-in expressions (no Python UDFs):
 4. n-gram jaccard — brute-force pairwise (small-N oracle baseline only)
 
 Scale analysis (MinHash path): signatures are O(docs × perms), computed
-shuffle-free inside the scan stage (array_min over transform). The only
+shuffle-free inside the scan stage (functions/minhash_fast). The only
 shuffle is the (band_idx, band_hash) bucket groupBy; pairs are emitted
 inside buckets (no self-join, upstream computed once). Bucket sizes are
 bounded by true duplicate-group sizes plus hash-collision noise, so no
@@ -62,34 +62,6 @@ SHINGLE_WORDS = 2
 DEFAULT_MAX_BUCKET = 512
 
 
-def _persist_released_on_gc(df: DataFrame) -> DataFrame:
-    """persist() with an EXPLICIT lifecycle (round 14, guide §5 — the
-    r13 verdict's unpersist-discipline item): the cache entry is
-    released when the Python DataFrame is garbage-collected, i.e. as
-    soon as the query that built it drops its frames after the action.
-    Spark's CacheManager otherwise retains every persisted plan until
-    an explicit unpersist — across a long-lived session running many
-    query invocations those intra-query caches accumulate without
-    bound (each invocation builds fresh frames, so a stale entry can
-    never be re-hit; it is pure leak). The finalizer captures only the
-    py4j DataFrame handle (not the Python wrapper, which must stay
-    collectable) and unpersists non-blocking; a dead session/JVM makes
-    it a no-op."""
-    import weakref
-
-    df.persist()
-    jdf = df._jdf
-
-    def _release(j=jdf):
-        try:
-            j.unpersist(False)
-        except Exception:
-            pass  # session/JVM already gone — nothing left to leak
-
-    weakref.finalize(df, _release)
-    return df
-
-
 def exact_dedup_groups(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Exact dedup: group by normalized-text fingerprint; keep min id.
     One hash-partitioned shuffle on a 32-char key; at 100 TB, combine
@@ -126,79 +98,35 @@ def _perm_consts(p: int) -> tuple[int, int]:
 
 
 def minhash_signatures(shingled: DataFrame, n_perm: int = N_PERM,
-                       keep_shingles: bool = False,
-                       engine: str = "arrow") -> DataFrame:
-    """MinHash signature per doc with ZERO shuffle: hash each shingle
-    once (projected column → computed once, reused by all perms), then
-    one ``array_min(transform(...))`` per permutation — the whole
-    signature materializes inside the scan stage. At 100 TB this is the
-    difference between a narrow map stage and shuffling one exploded
-    row per (doc, shingle).
+                       keep_shingles: bool = False) -> DataFrame:
+    """MinHash signature per doc with ZERO shuffle: each shingle is
+    hashed once JVM-side (``xxhash64 & M31`` has no numpy twin), and
+    the permute-and-min runs in the Arrow kernel
+    functions/minhash_fast.py — the whole signature materializes
+    inside the scan stage. At 100 TB this is the difference between a
+    narrow map stage and shuffling one exploded row per
+    (doc, shingle).
 
-    The permutation constants are DATA (a literal array of structs),
-    not 32 unrolled expression subtrees: one nested transform keeps the
-    Catalyst tree O(1) in n_perm — planning + Janino compile time was
-    the dominant cost of the unrolled form at bench scale.
+    This is the one signature path: the corpus queries, the stored
+    index layouts and the streaming probes all run it. The interpreted
+    JVM higher-order-function fold it replaced (round 14 measured the
+    kernel 7.5x faster on a 100x signature probe and tied on the full
+    sf0.1 pipeline) survives only as the integer-parity oracle in
+    tests/test_winnow_kernel.py."""
+    from ..functions.minhash_fast import minhash_sigs_fast
 
-    ``engine`` picks where the permute-and-min runs; values are
-    INTEGER-IDENTICAL either way (parity-pinned), the choice is pure
-    physics, re-measured in round 14 after the kernel moved from
-    mapInPandas to mapInArrow (no pandas materialization, no per-row
-    Python objects — functions/minhash_fast.py):
-    - "arrow" (default since round 14): the numpy kernel. The round-10
-      rejection of the kernel for corpus scans (100x probe: 10.3 s JVM
-      vs 13.6 s then-mapInPandas) was the pandas boundary, not the
-      math — the mapInArrow form wins the r14 100x signature probe
-      7.5x (20.2 s vs 152.7 s JVM, scripts/mh_100x_probe_r14.py) and
-      ties the full sf0.1 pipeline (2.53 vs 2.58 s,
-      scripts/mh_engine_ab_r13.py re-run, 256-row parity), and was
-      already the streaming/incremental default (a 5,000-row probe
-      batch: ~4 s kernel vs 38 s serial fold).
-    - "jvm": the interpreted HOF fold — kept reachable for A/B and for
-      Python-worker-free deployments."""
+    keep = ["doc_id", "shingles"] if keep_shingles else ["doc_id"]
     hashed = shingled.select(
-        "doc_id",
-        "shingles",
+        *keep,
         F.transform(
             "shingles", lambda s: F.xxhash64(s).bitwiseAND(F.lit(_M31))
         ).alias("h31"),
     )
-    if engine == "arrow":
-        from ..functions.minhash_fast import minhash_sigs_fast
-
-        consts = [_perm_consts(p) for p in range(n_perm)]
-        if not keep_shingles:
-            hashed = hashed.select("doc_id", "h31")
-        return minhash_sigs_fast(
-            hashed, [a for a, _ in consts], [b for _, b in consts],
-            keep_shingles,
-        )
-    consts = F.array(
-        *[
-            F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
-            for a, b in (_perm_consts(p) for p in range(n_perm))
-        ]
+    consts = [_perm_consts(p) for p in range(n_perm)]
+    return minhash_sigs_fast(
+        hashed, [a for a, _ in consts], [b for _, b in consts],
+        keep_shingles,
     )
-    # The 2^31 reduction is essential: without it a*h+b is monotonic in
-    # h and every "permutation" would share one argmin shingle. It is
-    # a bitwiseAND, not pmod: for the non-negative products here
-    # x & (2^31-1) == pmod(x, 2^31) exactly, and the AND skips pmod's
-    # division + sign-fix in the interpreted hot loop (docs × perms ×
-    # shingles evaluations).
-    sig = F.transform(
-        consts,
-        lambda c: F.array_min(
-            F.transform(
-                F.col("h31"),
-                lambda h: (h * c["a"] + c["b"]).bitwiseAND(F.lit(_M31)),
-            )
-        ),
-    )
-    if keep_shingles:
-        # one-pass (doc_id, shingles, sig) — the stored-index shape
-        # (operators/silver.minhash_index_layout)
-        return hashed.select("doc_id", "shingles", sig.alias("sig"))
-    return hashed.select("doc_id", sig.alias("sig"))
 
 
 def lsh_candidate_pairs(signed: DataFrame, n_bands: int = N_BANDS,
@@ -333,26 +261,28 @@ def minhash_near_dups(docs: DataFrame, text_col: str = "text",
     """Full MinHash-LSH near-dup pipeline → verified (id_a, id_b, jac).
 
     The shingle sets feed both signature generation and the exact
-    verify; persist() (MEMORY_AND_DISK) stops Spark recomputing the
-    normalize→tokenize→ngram chain three times. At 100 TB this persist
-    spills to local disk per executor — still strictly cheaper than
-    re-scanning the corpus.
+    verify. Recall is the banding's: a pair at jaccard J becomes a
+    candidate with P = 1-(1-J^4)^16 (64 perms, 16 bands of 4) —
+    ≈0.89 at J=0.6 and ≈0.9998 at J=0.8. So the default 0.6 threshold
+    sits on the S-curve's shoulder and can miss a few pairs the exact
+    all-pairs oracle finds (one seeded corpus of 1-in-12 edited copies
+    measured 92 vs 94 rows), while pairs at J ≥ 0.8 — the true
+    near-dup regime of the gated corpora — are found all but surely.
 
-    The est_jac prefilter (threshold − 0.2 on the 32-perm signature
+    The est_jac prefilter (threshold − 0.2 on the 64-perm signature
     estimate) removes hash-collision candidates before the exact join:
-    for a true pair at jaccard ≥ threshold the miss probability is
-    P(Binom(32, t) < 32·(t−0.2)) ≈ 1e-8 at t=0.8; noise pairs at
-    jaccard ≤ 0.2 pass with P ≈ 1e-6 — and any that do pass are then
-    removed by the exact verify, so the prefilter only ever affects
-    recall through that 1e-8 tail.
+    a true pair at jaccard t is dropped with P(Binom(64, t) <
+    64·(t−0.2)) ≈ 6e-4 at t=0.6 and ≈ 1.3e-4 at t=0.8; noise pairs
+    that pass are removed by the exact verify, so the prefilter only
+    ever affects recall through that tail.
 
     ``max_bucket`` defaults to DEFAULT_MAX_BUCKET (round 7): the
     routed near-dup queries are protected against a pathological
     boilerplate band value out of the box; the cap is sized to never
     bind on the gated corpora so the brute-force oracle parity is
     unchanged there (margin pinned in tests)."""
-    shingled = _persist_released_on_gc(shingle_sets(docs, text_col))
-    signed = _persist_released_on_gc(minhash_signatures(shingled))
+    shingled = shingle_sets(docs, text_col)
+    signed = minhash_signatures(shingled)
     cands = estimate_jaccard(
         lsh_candidate_pairs(signed, max_bucket=max_bucket), signed
     ).filter(F.col("est_jac") >= threshold - 0.2)
@@ -415,7 +345,7 @@ def minhash_near_dups_incremental(corpus: DataFrame, new_docs: DataFrame,
     corpus side's signatures would be precomputed and stored columnar
     alongside the documents, making this a pure scan+probe."""
     c_sh = shingle_sets(corpus, text_col)
-    n_sh = _persist_released_on_gc(shingle_sets(new_docs, text_col))
+    n_sh = shingle_sets(new_docs, text_col)
     # two separate corpus branches on purpose: carrying the (large)
     # signature expression tree into the shingle-verify branch as one
     # combined frame measurably deepens the optimized expression tree
@@ -423,8 +353,8 @@ def minhash_near_dups_incremental(corpus: DataFrame, new_docs: DataFrame,
     # time) — the stored-index path avoids this for free because its
     # sig/shingles are plain parquet columns
     return _minhash_cross_verify(
-        minhash_signatures(c_sh, engine="arrow"), c_sh,
-        minhash_signatures(n_sh, engine="arrow"), n_sh,
+        minhash_signatures(c_sh), c_sh,
+        minhash_signatures(n_sh), n_sh,
         threshold,
     )
 
@@ -492,8 +422,8 @@ def minhash_cross_pairs_prepared(c_idx: DataFrame, new_docs: DataFrame,
     value-identical to the from-raw form (pinned by
     tests/test_streaming.py); per batch the corpus side is a pure
     scan+probe — no shingling, hashing, or signature folds."""
-    n_sh = _persist_released_on_gc(shingle_sets(new_docs, text_col))
-    n_sig = minhash_signatures(n_sh, engine="arrow")
+    n_sh = shingle_sets(new_docs, text_col)
+    n_sig = minhash_signatures(n_sh)
     return _minhash_cross_verify(c_idx, c_idx, n_sig, n_sh, threshold)
 
 
@@ -1102,9 +1032,8 @@ def char_ngram_near_dups_lsh(docs: DataFrame, text_col: str = "text",
     the scan stage, the only corpus-keyed shuffle is the (band,
     band_hash) bucket groupBy, and the exact verify touches candidate
     pairs only."""
-    shingled = _persist_released_on_gc(hashed_char_shingles(docs, text_col, n))
-    signed = _persist_released_on_gc(
-        minhash_signatures(shingled, n_perm=N_PERM_CHAR))
+    shingled = hashed_char_shingles(docs, text_col, n)
+    signed = minhash_signatures(shingled, n_perm=N_PERM_CHAR)
     cands = estimate_jaccard(
         lsh_candidate_pairs(
             signed, n_bands=N_BANDS_CHAR, rows_per_band=ROWS_PER_BAND_CHAR,
@@ -1209,7 +1138,6 @@ def containment_near_dups(docs: DataFrame, text_col: str = "text",
             F.transform("shingles", lambda g: F.xxhash64(g))
         ).alias("shingles"),
     )
-    sh = _persist_released_on_gc(sh)
     ex = sh.select("doc_id", F.size("shingles").alias("sz"),
                    F.explode("shingles").alias("s"))
     dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -1424,17 +1352,13 @@ def _banded_verified_pairs(hashes: DataFrame, max_hamming: int,
     Arrow kernel per bucket — so only the pair QUERY, whose output
     contract is the actual pair set, pays the quadratic emit.)
 
-    The bucket table is PERSISTED (round 13, guide §4.1/§2.3): the
-    small-bucket branch and BOTH sides of the big-bucket self-join
-    reference it, and Spark does not share common subtrees across
-    union/join branches — so a from-raw caller (image_dhash /
-    audio_fingerprint over blobs) was running its DECODE KERNEL three
-    times per query (three MapInPandas nodes over the same scan in
-    the captured plan). One cache fill runs the decode + the one
-    band-key shuffle once; the branches then read bucket rows
-    ((id, hash) members — KBs per thousand docs) from cache."""
-    buckets = _persist_released_on_gc(
-        _hamming_buckets(hashes, max_hamming, id_col, hash_col))
+    The bucket table feeds the small-bucket branch and BOTH sides of
+    the big-bucket self-join. Spark shares the band-key shuffle across
+    those branches only through exchange reuse, so a from-raw caller
+    (image_dhash / audio_fingerprint over blobs) may run its decode
+    kernel once per branch; an intra-query cache here is unmeasured
+    and left out."""
+    buckets = _hamming_buckets(hashes, max_hamming, id_col, hash_col)
     in_row_bucket = 256
 
     def verified(cand: DataFrame) -> DataFrame:
@@ -1719,7 +1643,7 @@ def ensemble_near_dups_from_state(state, new_docs: DataFrame,
     (literal-plan serialization); numbers in
     scripts/ensemble_probe_r12.json."""
     n_sh = shingle_sets(new_docs, text_col)
-    n_sig = minhash_signatures(n_sh, engine="arrow")
+    n_sig = minhash_signatures(n_sh)
     nb = n_sh.select(F.col("doc_id").alias("new_id"),
                      F.col("shingles").alias("sh_b"))
 
@@ -2529,29 +2453,15 @@ def phash_edges_apply_delta(stored_edges: DataFrame,
     read side's distinct — callers replaying at-least-once delivery
     should dedup the shard against stored membership first, or ride
     the versioned ingest sink that already guarantees it."""
-    # PERSIST the two shard-sized frames every downstream branch
-    # re-derives (round 13, guide §2.4/§5): ``newh`` feeds the attach
-    # build, the anti-join, and (via nreps) both banded probes, and
-    # each of the ~5 BroadcastExchange builds below is a separate job
-    # that would otherwise re-execute the shard scan subtree from the
-    # source — measured 1.84 s (noop) to emit 209 delta edges at
-    # bench scale, dominated by exactly that re-execution. Both
-    # frames are shard-sized by construction (the delta premise), so
-    # the cache is KBs; this is intra-query reuse, same pattern as
-    # minhash_near_dups' shingle persist.
-    newh = _persist_released_on_gc(
-        new_hashes.filter(F.col(hash_col).isNotNull())
-        .select("doc_id", F.col(hash_col).alias("hv"))
-    )
+    newh = new_hashes.filter(F.col(hash_col).isNotNull()).select(
+        "doc_id", F.col(hash_col).alias("hv"))
     hit = stored_reps.join(F.broadcast(newh), "hv")
     attach = hit.filter(F.col("rep_id") != F.col("doc_id")).select(
         F.col("rep_id").alias("id_a"), F.col("doc_id").alias("id_b")
     )
     matched = F.broadcast(hit.select("hv").distinct())
     unmatched = newh.join(matched, "hv", "left_anti")
-    nreps = _persist_released_on_gc(
-        unmatched.groupBy("hv").agg(F.min("doc_id").alias("rep_id"))
-    )
+    nreps = unmatched.groupBy("hv").agg(F.min("doc_id").alias("rep_id"))
     nstar = (
         unmatched.join(F.broadcast(nreps), "hv")
         .filter(F.col("doc_id") != F.col("rep_id"))

@@ -13,12 +13,15 @@ with bounded parallelism instead:
    a #partitions-row aggregate, broadcast back.
 
 This is the textbook distributed sort-rank (TeraSort's ranking shape).
-The input is persisted while counts and ranks are computed: the two
-jobs must see identical range boundaries (repartitionByRange samples
-boundaries, and a recompute could re-sample them differently). At
-production scale the persist can be replaced by precomputed explicit
+The counts branch and the numbering branch must see identical range
+boundaries (repartitionByRange samples its boundaries, and a
+recompute could re-sample them differently). They do because both
+read ONE range-partitioning Exchange: Spark computes it once and the
+second branch reads it back as a ``ReusedExchange`` — no cache is
+involved (the executed plan has no ``InMemoryTableScan``; pinned by
+tests/test_plan_audit.py). At production scale precomputed explicit
 boundaries (approxQuantile on the order key) feeding a deterministic
-bucket expression — same plan shape, no cache.
+bucket expression would make the two branches agree by construction.
 """
 
 from __future__ import annotations
@@ -44,10 +47,7 @@ def global_row_number(
         if num_partitions
         else df.repartitionByRange(*order_cols)
     )
-    from .dedup import _persist_released_on_gc
-
-    tagged = _persist_released_on_gc(
-        ranged.withColumn("_pid", F.spark_partition_id()))
+    tagged = ranged.withColumn("_pid", F.spark_partition_id())
     counts = tagged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_cnt"))
     # Exclusive prefix sum over the (tiny, #partitions-row) counts —
     # the only single-partition window in the plan, and it is bounded

@@ -200,43 +200,7 @@ def _blob_layout(spark: SparkSession, sf_dir: str, prefix: str,
                     and ".tmp." not in d):
                 shutil.rmtree(os.path.join(_SILVER_ROOT, d),
                               ignore_errors=True)
-    df = spark.read.schema(schema).parquet(target)
-    # Tag the frame with its backing directory so callers can size
-    # compute stages from the footers (parquet_row_count) without a
-    # Spark job.
-    df._layout_dir = target
-    return df
-
-
-def parquet_row_count(df: DataFrame) -> int | None:
-    """Row count of a _blob_layout-backed frame read straight from
-    its parquet FOOTERS — a driver-side metadata scan (no Spark job),
-    the cheap cardinality a caller needs to size a compute stage's
-    shuffle width. None when the frame isn't a tagged layout or the
-    footers can't be read (callers fall back to core-count width)."""
-    target = getattr(df, "_layout_dir", None)
-    if not target:
-        return None
-    try:
-        import pyarrow.parquet as pq
-        total = 0
-        files_seen = False
-        # os.walk, not listdir: partitioned layouts (partition_by=
-        # 'kind' → kind=*/part-*.parquet) keep their files one level
-        # down, and a top-level-only scan would report 0 rows.
-        for root, _dirs, files in os.walk(target):
-            for f in files:
-                if f.endswith(".parquet"):
-                    files_seen = True
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)).metadata.num_rows
-        # 0 from valid footers is a KNOWN cardinality (a genuinely
-        # empty layout) and must not trigger callers' fallback
-        # recompute; None is reserved for "no parquet files found"
-        # (round-12 advice — `total or None` conflated the two).
-        return total if files_seen else None
-    except Exception:
-        return None
+    return spark.read.schema(schema).parquet(target)
 
 
 def gif_blob_layout(spark: SparkSession, sf_dir: str,
@@ -1608,26 +1572,24 @@ def dsir_model_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _two_level_layout(spark: SparkSession, sf_dir: str, cents_fn,
-                      prefix: str, vec_elem
-                      ) -> tuple[DataFrame, DataFrame, DataFrame]:
+                      prefix: str, vec_elem) -> DataFrame:
     """The TWO-LEVEL IVF quantizer hierarchy as materialized parquet
-    (round 13 optimization): ``(coarse_row, blocks)`` exactly as
-    operators/similarity.two_level_model derives them from a fine
-    centroid frame — the coarse cell row (ONE row, the sorted
-    m = ceil(sqrt(k)) coarse struct array) under ``<prefix>c`` and the
-    per-coarse-cell fine blocks under ``<prefix>b``. The hierarchy is
-    pure MODEL state (a deterministic function of the stored
+    (rounds 13-14): the ONE-ROW folded model (_coarse, _blkmap) under
+    ``<prefix>m`` — the sorted m = ceil(sqrt(k)) coarse struct array
+    plus the per-coarse-cell fine blocks as a ccell→blk map, exactly as
+    operators/similarity.two_level_folded_row folds what
+    two_level_model derives from a fine centroid frame. The hierarchy
+    is pure MODEL state (a deterministic function of the stored
     centroids), so production stores it next to the centroid layout
     instead of re-deriving it inside every encode plan; the layout is
-    one execution of two_level_model written to parquet
+    one execution of the in-plan derivation written to parquet
     (longs/doubles/floats round-trip bit-exactly), so layout-fed
-    assignment is value-identical to the in-plan derivation and every
-    consumer keeps its oracle (guide §1.2 step 1 — the in-plan
-    derivation cost every model broadcast re-paid: a model-sized
-    window + two aggregations + their jobs, per query action).
-    ``vec_elem`` pins the stored cent_vec element type to the source
-    model's (float for raw-embedding centroids, double for fitted
-    means)."""
+    assignment is value-identical and every consumer keeps its oracle
+    (guide §1.2 step 1 — the encode's broadcast build is one tiny
+    parquet scan instead of a model-sized window + two aggregations
+    + a join per query action). ``vec_elem`` pins the stored cent_vec
+    element type to the source model's (float for raw-embedding
+    centroids, double for fitted means)."""
     from pyspark.sql.types import (
         ArrayType, DoubleType, LongType, MapType, StructField, StructType,
     )
@@ -1639,39 +1601,19 @@ def _two_level_layout(spark: SparkSession, sf_dir: str, cents_fn,
         StructField("cent_vec", ArrayType(vec_elem)),
         StructField("cnrm", DoubleType()),
     ])
-    coarse_schema = StructType([
-        StructField("_coarse", ArrayType(cent_t)),
-    ])
-    blocks_schema = StructType([
-        StructField("ccell", LongType()),
-        StructField("blk", ArrayType(cent_t)),
-    ])
     folded_schema = StructType([
         StructField("_coarse", ArrayType(cent_t)),
         StructField("_blkmap", MapType(LongType(), ArrayType(cent_t))),
     ])
-    coarse = _blob_layout(spark, sf_dir, f"{prefix}c",
-                          lambda: two_level_model(cents_fn())[0],
-                          coarse_schema, src_table="embeddings")
-    blocks = _blob_layout(spark, sf_dir, f"{prefix}b",
-                          lambda: two_level_model(cents_fn())[1],
-                          blocks_schema, src_table="embeddings")
-    # Round 14: the folded ONE-ROW model (coarse array + ccell→blk
-    # map) stored too, so the folded encode's broadcast build is a
-    # single tiny parquet scan (two_level_folded_row is a pure
-    # reshaping of the two frames above — value-identity pinned by
-    # test_two_level_layout_matches_inplan through the consumers).
-    folded = _blob_layout(spark, sf_dir, f"{prefix}m",
-                          lambda: two_level_folded_row(
-                              *two_level_model(cents_fn())),
-                          folded_schema, src_table="embeddings")
-    return coarse, blocks, folded
+    return _blob_layout(spark, sf_dir, f"{prefix}m",
+                        lambda: two_level_folded_row(
+                            *two_level_model(cents_fn())),
+                        folded_schema, src_table="embeddings")
 
 
 def kmeans_two_level_layout(spark: SparkSession, sf_dir: str, k: int = 16,
                             iters: int = 2, sample_mod: int = 2,
-                            round_dp: int = 6,
-                            ) -> tuple[DataFrame, DataFrame, DataFrame]:
+                            round_dp: int = 6) -> DataFrame:
     """Two-level hierarchy over the fitted k-means codebook
     (kmeans_centroid_layout) — the stored model ann_ivf_kmeans
     assigns under (prefix ``tl1kmc_…``, keyed like the codebook)."""
@@ -1687,8 +1629,7 @@ def kmeans_two_level_layout(spark: SparkSession, sf_dir: str, k: int = 16,
 
 
 def cent90_two_level_layout(spark: SparkSession, sf_dir: str,
-                            target_cell_rows: int = 64,
-                            ) -> tuple[DataFrame, DataFrame, DataFrame]:
+                            target_cell_rows: int = 64) -> DataFrame:
     """Two-level hierarchy over the frozen 90%-corpus centroid model
     (ivf_cent90_layout) — the stored model the ANN index maintenance
     shard encodes under (prefix ``tl1c90_…``)."""

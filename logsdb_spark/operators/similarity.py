@@ -188,9 +188,7 @@ def pairwise_cosine_dedup(emb: DataFrame, threshold: float = 0.95) -> DataFrame:
 def ivf_cell_near_dups(emb: DataFrame, threshold: float = 0.4,
                        n_centroids: int | None = None,
                        n_assign: int = 2,
-                       target_cell_rows: int | None = None,
-                       verify: str = "hof",
-                       prefilter: str = "blas") -> DataFrame:
+                       target_cell_rows: int | None = None) -> DataFrame:
     """IVF-blocked embedding near-dup: assign every vector to its
     ``n_assign`` nearest centroid cells (multi-assignment — the
     pair-generation analogue of query-side nprobe), emit candidate
@@ -231,42 +229,20 @@ def ivf_cell_near_dups(emb: DataFrame, threshold: float = 0.4,
     ``n_centroids`` to pin it and let the centroid filter push down to
     the scan instead.
 
-    ``prefilter="blas"`` (the default since round 10) scores every
-    intra-cell pair with one fp64 GEMM per cell and hands only the
-    survivors (answer + a conservative guard band — see
+    Candidate pairs come from the per-cell BLAS prefilter (round 10):
+    one fp64 GEMM per cell scores every intra-cell pair and hands only
+    the survivors (answer + a conservative guard band — see
     functions/arrow_kernels.cell_prefilter_pairs for the no-false-
     negative derivation) to the exact ordered-fold verify, so the
-    final values are identical to ``prefilter="none"`` (the r5-r9
-    candidate-equi-join shape, kept for A/B) while candidate-volume
-    work never reaches the join machinery."""
+    final values equal verifying every intra-cell pair while
+    candidate-volume work never reaches the join machinery."""
+    from ..functions.arrow_kernels import cell_prefilter_pairs
+
     full_assigned = ivf_cell_assignments(
         emb, n_centroids=n_centroids, n_assign=n_assign,
         target_cell_rows=target_cell_rows,
     )
-    if prefilter == "blas":
-        from ..functions.arrow_kernels import cell_prefilter_pairs
-
-        cands = cell_prefilter_pairs(full_assigned, threshold)
-    else:
-        assigned = full_assigned.select("vec_id", "cell")
-        # Intra-cell pair generation by cell-keyed EQUI-join, not the
-        # collect_list pair-emit the LSH dedup uses: LSH buckets are
-        # bounded by true dup-group size, but an IVF cell holds
-        # ~corpus/n_centroids vectors — collecting one and emitting
-        # k²/2 pair structs in a single row would concentrate a
-        # cell's whole quadratic output in one task's one row. The
-        # equi-join shuffles on the same cell key but streams the
-        # pair space through normal join machinery (AQE can split a
-        # skewed cell). A pair sharing both assigned cells is folded
-        # by the distinct.
-        a_ids = assigned.select("cell", F.col("vec_id").alias("id_a"))
-        b_ids = assigned.select("cell", F.col("vec_id").alias("id_b"))
-        cands = (
-            a_ids.join(b_ids, "cell")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+    cands = cell_prefilter_pairs(full_assigned, threshold)
     a = _with_norm(
         emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va")),
         "va", "_na",
@@ -275,53 +251,26 @@ def ivf_cell_near_dups(emb: DataFrame, threshold: float = 0.4,
         emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb")),
         "vb", "_nb",
     )
-    # Verify kernel choice (``verify``): "hof" = interpreted JVM
-    # ordered-fold dot; "arrow" = the numpy fold-identical kernel
-    # (functions/arrow_kernels.dot_arrow — same FP operation order, so
-    # the two routes are bit-identical; pinned by
-    # test_arrow_dot_bit_identical_to_hof). Measured round 7 on an
-    # idle 32-core local (this config, 3 reps): sf0.1 HOF 3.24 s vs
-    # Arrow 2.57 s (Arrow 1.26x — small-data regime, serialization
-    # hides behind idle cores); 30x corpus HOF 31.1 s vs Arrow 53.4 s
-    # warm (HOF 1.7x — the per-pair Arrow array transfer + np.stack
-    # grows linearly with candidate volume while the codegen'd fold
-    # stays in the JVM). The JVM fold is therefore the DEFAULT and
-    # what every registered query ships; "arrow" remains available
-    # for narrow-candidate workloads. See README "JVM vs Arrow".
-    return _verify_cosine_pairs(cands, a, b, threshold, verify)
+    return _verify_cosine_pairs(cands, a, b, threshold)
 
 
 def _verify_cosine_pairs(cands: DataFrame, a: DataFrame, b: DataFrame,
-                         threshold: float, verify: str,
-                         est_candidates: int | None = None,
-                         rows_per_task: int = 200_000) -> DataFrame:
+                         threshold: float) -> DataFrame:
     """Exact-cosine verification tail shared by the in-plan and
     index-fed IVF dedup routes: join the candidate pairs to the
     (id, vector, norm) sides and keep cos >= threshold. The rounded
-    cosine is computed with the ordered fold either way, so the two
-    callers are value-identical.
+    cosine is computed with the JVM ordered fold (functions/vectors.
+    dot — the same FP operation order as the DuckDB oracle's
+    list_sum), so the two callers are value-identical.
 
     The candidate frame is REPARTITIONED first: the verify stage is
     COMPUTE-bound (a 64-dim fold per pair), and AQE's byte-based
     coalescing — seeing a few MB of (id_a, id_b) pairs — would
     otherwise shrink it to one task (measured round 8: the sf0.1
     verify ran serially at ~2 s; spread over 32 cores it is ~0.4 s).
-    The explicit partition count marks the exchange user-specified,
-    which AQE honors. Width is VOLUME-SCALED (round 9): the floor is
-    defaultParallelism (every core busy even on small candidate
-    sets), and when the caller supplies ``est_candidates`` (e.g. from
-    the materialized index's parquet footers — a driver-side metadata
-    read, no job) the width grows as ceil(est/rows_per_task), so
-    per-task work stays bounded at 100x candidate volume instead of
-    growing with a fixed core-count width."""
-    if verify == "arrow":
-        from ..functions.arrow_kernels import dot_arrow as _dot
-    else:
-        _dot = dot
+    The explicit partition count (defaultParallelism) marks the
+    exchange user-specified, which AQE honors."""
     width = cands.sparkSession.sparkContext.defaultParallelism
-    if est_candidates:
-        width = min(max(width, -(-int(est_candidates) // rows_per_task)),
-                    65536)
     cands = cands.repartition(width, F.col("id_a"))
     return (
         cands.join(a, "id_a")
@@ -330,7 +279,7 @@ def _verify_cosine_pairs(cands: DataFrame, a: DataFrame, b: DataFrame,
             "id_a",
             "id_b",
             F.round(
-                _dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")), 4
+                dot(F.col("va"), F.col("vb")) / (F.col("_na") * F.col("_nb")), 4
             ).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= threshold)
@@ -440,14 +389,14 @@ def two_level_model(cents: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def two_level_folded_row(coarse_row: DataFrame,
                          blocks: DataFrame) -> DataFrame:
-    """The ONE-ROW folded model — (_coarse, _blkmap) — the folded
-    encode (ivf_assign_with_model fold_blocks=True) broadcasts:
-    the coarse struct array joined with the block relation collapsed
-    into a ccell→blk map (round 14). Pure reshaping of the two
-    two_level_model frames, so a layout of this row is value-identical
-    to folding in-plan (silver._two_level_layout stores it as the
-    ``<prefix>m`` file, making the broadcast build a single tiny
-    parquet scan instead of two scans + an aggregate + a join)."""
+    """The ONE-ROW folded model — (_coarse, _blkmap) — the two-level
+    encode (ivf_assign_with_model) broadcasts: the coarse struct array
+    joined with the block relation collapsed into a ccell→blk map
+    (round 14). Pure reshaping of the two two_level_model frames, so a
+    layout of this row is value-identical to folding in-plan
+    (silver._two_level_layout stores it, making the broadcast build a
+    single tiny parquet scan instead of two scans + an aggregate + a
+    join)."""
     return coarse_row.join(
         blocks.agg(
             F.map_from_entries(
@@ -460,8 +409,7 @@ def two_level_folded_row(coarse_row: DataFrame,
 def ivf_assign_with_model(emb: DataFrame, cents: DataFrame,
                           n_assign: int = 2,
                           coarse_probe: int | None = None,
-                          two_level: tuple[DataFrame, DataFrame] | None = None,
-                          fold_blocks: bool = True,
+                          two_level: DataFrame | None = None,
                           ) -> DataFrame:
     """The ENCODE half of ivf_cell_assignments, split out (round 12)
     so it can run against an EXPLICIT (frozen) centroid model: given
@@ -482,118 +430,48 @@ def ivf_assign_with_model(emb: DataFrame, cents: DataFrame,
     cells (two_level_model) and takes the top ``coarse_probe``, then
     scores ONLY the fine centroids inside those coarse cells — per-row
     cost O(coarse_probe·sqrt(k)) instead of O(k). Still a pure
-    map-side pipeline: the corpus is never shuffled. Round 14 collapsed
-    the r13 shape (one broadcast coarse row + ``coarse_probe``
-    SEQUENTIAL broadcast-hash joins against the block relation — the
-    r13 verdict's measured encode-constant regression) into ONE
-    broadcast of a single model row carrying the coarse array plus the
-    blocks as a ccell→blk map: per row, one HOF coarse ranking, one
-    map lookup per probed cell, one HOF fine ranking — no join probes
-    at all. The candidate SET and its order are exactly the r13
-    join form's (the map lookup returns the same per-ccell block the
-    equi-join matched, in the same probe order; a missing/overflowed
-    ccell yields NULL → array_compact, exactly like the old left
-    join), so the assignment rule and every oracle are unchanged.
-    Scale note: the folded model row carries all k fine structs in one
-    broadcast row — the same total bytes as the flat path's mega-row;
-    for models too large for a single broadcast row (≳ 100M cells) set
-    ``fold_blocks=False`` to keep the r13 per-block join form, whose
-    broadcast rows stay MB-sized. The hierarchical assignment is a
+    map-side pipeline: the corpus is never shuffled. The model
+    broadcasts as ONE row carrying the coarse array plus the blocks as
+    a ccell→blk map (round 14): per row, one HOF coarse ranking, one
+    map lookup per probed cell, one HOF fine ranking — no join probes.
+    The r13 form it replaced (``coarse_probe`` sequential
+    broadcast-hash joins against the block relation) selects the same
+    candidates in the same order and lives on as the test oracle in
+    tests/test_dedup_similarity.py. Scale note: the folded row carries
+    all k fine structs in one broadcast row — the same total bytes as
+    the flat path's mega-row. The hierarchical assignment is a
     different (approximate) cell relation than the flat one — its
     oracles replay the identical two-stage rule, and recall gates pin
     quality.
 
-    ``two_level`` lets the caller hand in a PREBUILT
-    (coarse_row, blocks) pair — or, round 14, a
-    (coarse_row, blocks, folded_row) triple whose third frame is the
-    materialized one-row folded model (two_level_folded_row), which
-    the folded encode broadcasts directly — the materialized
-    two-level model layout (operators/silver._two_level_layout),
-    round 13: the
-    hierarchy is pure model state, so production stores it next to
-    the centroids instead of re-deriving it per query. Value-identical
-    to the in-plan derivation (the layout IS one execution of
+    ``two_level`` lets the caller hand in the PREBUILT folded model
+    row (two_level_folded_row) — the materialized two-level model
+    layout (operators/silver._two_level_layout): the hierarchy is pure
+    model state, so production stores it next to the centroids
+    instead of re-deriving it per query. Value-identical to the
+    in-plan derivation (the layout IS one execution of
     two_level_model); at bench scale it removes the window + two
     aggregation jobs embedded in every model broadcast build
     (guide §1.2 step 1 — fewer jobs, same plan tail)."""
     if coarse_probe is not None:
-        if two_level is not None and len(two_level) > 2 and fold_blocks:
-            # The PREFOLDED one-row model layout (round 14): skip the
-            # in-plan fold entirely — the broadcast build is one tiny
-            # parquet scan.
-            coarse_row = blocks = None
-            model_row = two_level[2]
-        else:
-            coarse_row, blocks = (two_level[:2] if two_level is not None
-                                  else two_level_model(cents))
-            model_row = None
-        if fold_blocks:
-            # ONE broadcast build, zero join probes per row (round 14,
-            # guide §3.1/§4): the coarse row and the block relation
-            # fold into a single model row — (_coarse, _blkmap) — and
-            # the per-row candidate set is a map lookup per probed
-            # coarse cell. try_element_at (not element_at): NULL for a
-            # ccell with no block (a duplicate-centroid coarse cell
-            # that lost its own fine member to an earlier tie — the
-            # case the old left join left null), compacted away.
-            if model_row is None:
-                model_row = two_level_folded_row(coarse_row, blocks)
-            cur = (
-                _with_norm(emb, "embedding", "_nrm")
-                .join(F.broadcast(model_row))
-            )
-            cands = F.flatten(
-                F.array_compact(
-                    F.transform(
-                        _topm_from(
-                            F.col("_coarse"), F.col("embedding"),
-                            F.col("_nrm"), coarse_probe,
-                        ),
-                        lambda c: F.try_element_at(F.col("_blkmap"), c),
-                    )
-                )
-            )
-            return (
-                cur.select(
-                    "vec_id",
-                    F.posexplode(
-                        _topm_from(cands, F.col("embedding"), F.col("_nrm"),
-                                   n_assign)
-                    ).alias("rk", "cell"),
-                    "embedding",
-                    F.col("_nrm").alias("nrm"),
-                )
-                .select("vec_id", "cell", "rk", "embedding", "nrm")
-            )
+        # try_element_at (not element_at): NULL for a ccell with no
+        # block (a duplicate-centroid coarse cell that lost its own
+        # fine member to an earlier tie), compacted away.
+        model_row = (two_level if two_level is not None
+                     else two_level_folded_row(*two_level_model(cents)))
         cur = (
             _with_norm(emb, "embedding", "_nrm")
-            .join(F.broadcast(coarse_row))
-            .select(
-                "vec_id",
-                "embedding",
-                "_nrm",
-                _topm_from(
-                    F.col("_coarse"), F.col("embedding"), F.col("_nrm"),
-                    coarse_probe,
-                ).alias("_cc"),
-            )
+            .join(F.broadcast(model_row))
         )
-        for i in range(coarse_probe):
-            blk = blocks.select(
-                F.col("ccell").alias(f"_bc{i}"), F.col("blk").alias(f"_blk{i}")
-            )
-            # F.get (not element_at): null past the array end — a
-            # model with m < coarse_probe coarse cells just probes
-            # them all; the left join keeps the row, array_compact
-            # drops the null block.
-            cur = cur.join(
-                F.broadcast(blk),
-                F.get(F.col("_cc"), F.lit(i)) == F.col(f"_bc{i}"),
-                "left",
-            )
         cands = F.flatten(
             F.array_compact(
-                F.array(*[F.col(f"_blk{i}") for i in range(coarse_probe)])
+                F.transform(
+                    _topm_from(
+                        F.col("_coarse"), F.col("embedding"),
+                        F.col("_nrm"), coarse_probe,
+                    ),
+                    lambda c: F.try_element_at(F.col("_blkmap"), c),
+                )
             )
         )
         return (
@@ -632,7 +510,7 @@ def ivf_assign_apply_delta(stored_assign: DataFrame, cents: DataFrame,
                            new_emb: DataFrame,
                            n_assign: int = 2,
                            coarse_probe: int | None = None,
-                           two_level: tuple[DataFrame, DataFrame] | None = None,
+                           two_level: DataFrame | None = None,
                            ) -> DataFrame:
     """INCREMENTAL maintenance of the IVF assignment index under an
     arriving shard (round 12 — the ANN twin of the dedup edge
@@ -651,40 +529,19 @@ def ivf_assign_apply_delta(stored_assign: DataFrame, cents: DataFrame,
     )
 
 
-def ivf_near_dups_prepared(idx: DataFrame, threshold: float = 0.85,
-                           verify: str = "hof",
-                           est_candidates: int | None = None,
-                           prefilter: str = "blas") -> DataFrame:
+def ivf_near_dups_prepared(idx: DataFrame,
+                           threshold: float = 0.85) -> DataFrame:
     """ivf_cell_near_dups DOWNSTREAM of the assignment index: ``idx``
     is the (vec_id, cell, rk, embedding, nrm) relation — read from the
-    materialized ivf_assign_layout or built in-plan. With
-    ``prefilter="blas"`` (default, round 10) the index rows group by
-    cell straight into the GEMM prefilter (vectors + norms ride in
-    the layout, so no join precedes it) and only the survivor pairs
-    reach the exact verify; ``prefilter="none"`` keeps the r8-r9
-    candidate-equi-join shape. Either way the exact-cosine verify
-    sides read the UNIQUE rk=0 rows, whose precomputed norms
-    round-trip parquet bit-exactly, so this shares the in-plan form's
-    oracle. ``est_candidates`` (rows x cell size / 2, derivable from
-    the layout's parquet footers) sizes the verify stage's width — see
-    _verify_cosine_pairs (with the prefilter the survivor set is
-    ~answer-sized, so the volume-scaled width matters only for the
-    "none" shape)."""
-    if prefilter == "blas":
-        from ..functions.arrow_kernels import cell_prefilter_pairs
+    materialized ivf_assign_layout or built in-plan. The index rows
+    group by cell straight into the GEMM prefilter (vectors + norms
+    ride in the layout, so no join precedes it) and only the survivor
+    pairs reach the exact verify, whose sides read the UNIQUE rk=0
+    rows; their precomputed norms round-trip parquet bit-exactly, so
+    this shares the in-plan form's oracle."""
+    from ..functions.arrow_kernels import cell_prefilter_pairs
 
-        cands = cell_prefilter_pairs(idx, threshold)
-        est_candidates = None
-    else:
-        assigned = idx.select("vec_id", "cell")
-        a_ids = assigned.select("cell", F.col("vec_id").alias("id_a"))
-        b_ids = assigned.select("cell", F.col("vec_id").alias("id_b"))
-        cands = (
-            a_ids.join(b_ids, "cell")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
+    cands = cell_prefilter_pairs(idx, threshold)
     uniq = idx.filter(F.col("rk") == 0)
     a = uniq.select(
         F.col("vec_id").alias("id_a"),
@@ -696,8 +553,7 @@ def ivf_near_dups_prepared(idx: DataFrame, threshold: float = 0.85,
         F.col("embedding").alias("vb"),
         F.col("nrm").alias("_nb"),
     )
-    return _verify_cosine_pairs(cands, a, b, threshold, verify,
-                                est_candidates=est_candidates)
+    return _verify_cosine_pairs(cands, a, b, threshold)
 
 
 def kmeans_centroids(emb: DataFrame, k: int = 16, iters: int = 2,
@@ -819,7 +675,7 @@ def ivf_ann_topk(emb: DataFrame, probes: DataFrame, k: int = 10,
                  centroids: DataFrame | None = None,
                  assign_m: int = 1,
                  coarse_probe: int | None = None,
-                 two_level: tuple[DataFrame, DataFrame] | None = None,
+                 two_level: DataFrame | None = None,
                  ) -> DataFrame:
     """IVF-style ANN: partition the corpus into centroid cells (inverted
     lists), search only the ``nprobe`` cells nearest each probe.

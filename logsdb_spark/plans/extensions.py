@@ -1271,8 +1271,8 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf_assign_layout — the (vec_id, cell, rk, embedding, nrm)
     inverted-list state a production ANN store maintains at ingest,
     mirroring the r7 minhash/winnow index discipline), so the per-run
-    cost is the cell-keyed candidate join + exact-cosine verify,
-    never the centroid scoring chain. Parameters unchanged (threshold
+    cost is the per-cell BLAS prefilter + exact-cosine verify, never
+    the centroid scoring chain. Parameters unchanged (threshold
     0.85, top-2 multi-assignment, ``target_cell_rows=64`` — cell
     count n/64, candidate volume n·64, LINEAR in the corpus), and
     assignments are deterministic + parquet-exact, so the oracle is
@@ -1280,18 +1280,11 @@ def dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the index stores. The from-raw pipeline stays registered AND
     benched as ``dedup_embedding_ann_inplan``; the sqrt-cells
     0.4-threshold form lives on as ``dedup_embedding_ann_coverage``."""
-    from ..operators.silver import ivf_assign_layout, parquet_row_count
+    from ..operators.silver import ivf_assign_layout
     from ..operators.similarity import ivf_near_dups_prepared
 
     idx = ivf_assign_layout(spark, sf_dir, n_assign=2, target_cell_rows=64)
-    # Verify-stage width scales with candidate volume: each of the
-    # index's assignment rows pairs with its ~64-row cell (halved by
-    # id_a < id_b). Footer read, no job; None → core-count floor.
-    n_rows = parquet_row_count(idx)
-    est = n_rows * 32 if n_rows else None
-    return ivf_near_dups_prepared(
-        idx, threshold=0.85, est_candidates=est
-    ).orderBy("id_a", "id_b")
+    return ivf_near_dups_prepared(idx, threshold=0.85).orderBy("id_a", "id_b")
 
 
 @register(
@@ -6719,7 +6712,6 @@ def dedup_media_ensemble_keep_inplan(spark: SparkSession,
     functions of the blobs, so the two forms are value-identical
     (parity also pinned by test_media_evidence_index_parity)."""
     from ..operators.dedup import (
-        _persist_released_on_gc,
         connected_components,
         phash_component_edges,
         winnow_component_edges,
@@ -6750,13 +6742,8 @@ def dedup_media_ensemble_keep_inplan(spark: SparkSession,
     vex = (
         video_frame_hashes(anim, stride=2)
         .select("doc_id", F.col("fhash").alias("fp"))
-        # persisted: guards the multi-frame LZW decode (the dominant
-        # constant the r10 media probe measured at 100x) against
-        # re-evaluation across plan branches (released on GC — r14
-        # unpersist discipline).
         .distinct()
     )
-    vex = _persist_released_on_gc(vex)
     vpairs = winnow_component_edges(vex)
     pairs = (
         iedges.unionByName(aedges)

@@ -49,17 +49,12 @@ _BAR_KEY_SQL = "printf('%020d|%012d', epoch_us(ts), event_id)"
 def _daily_grid(daily: DataFrame) -> DataFrame:
     """Dense (day x event_type) calendar grid spanning the data's own
     date range — derived from the already-aggregated DAILY table (day,
-    event_type, ...), never from the fact: bounds and the distinct
-    type list read days-x-types rows, so the events scan happens once
-    per query. Callers persist() the daily table before building the
-    grid — without that barrier Catalyst collapses the derived min/max
-    and distinct back THROUGH the aggregate into separate
-    (column-pruned) fact scans, exactly the multi-scan this derivation
-    exists to avoid. The persisted table is days x types rows — the
-    stored-rollup analogue, trivially cacheable. The grid is thousands
-    of rows at any corpus scale, so it stays broadcast-side in every
-    downstream join and the fact table never reshuffles for the
-    spine."""
+    event_type, ...), never from the fact directly. No cache pins the
+    daily table, so Catalyst may plan the derived min/max and distinct
+    as their own column-pruned fact scans below the aggregate. The
+    grid is thousands of rows at any corpus scale, so it stays
+    broadcast-side in every downstream join and the fact table never
+    reshuffles for the spine."""
     bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
     spine = bounds.select(
         F.explode(F.sequence("d0", "d1")).alias("day")
@@ -112,9 +107,6 @@ def gap_fill_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("vi") / F.lit(10000.0)).alias("sv"),
         )
     )
-    from ..operators.dedup import _persist_released_on_gc
-
-    c = _persist_released_on_gc(c)
     grid = _daily_grid(c)
     return (
         grid.join(c, ["day", "event_type"], "left")
@@ -183,9 +175,6 @@ def locf_daily_values(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("av")
         )
     )
-    from ..operators.dedup import _persist_released_on_gc
-
-    a = _persist_released_on_gc(a)
     grid = _daily_grid(a)
     w = (
         Window.partitionBy("event_type")
@@ -345,9 +334,6 @@ def anomaly_daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = ev.groupBy(
         F.col("event_date").alias("day"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    from ..operators.dedup import _persist_released_on_gc
-
-    c = _persist_released_on_gc(c)
     d = _daily_grid(c).join(c, ["day", "event_type"], "left").select(
         "day", "event_type", F.coalesce("n", F.lit(0)).alias("n")
     )

@@ -39,6 +39,17 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    """One line counting the @slow tests this run skipped, so a
+    default-profile pass is never mistaken for the full profile."""
+    n = sum(1 for r in terminalreporter.stats.get("skipped", [])
+            if "slow" in r.keywords)
+    if n:
+        terminalreporter.write_line(
+            f"slow profile: {n} @slow tests skipped "
+            "(set SPARK_GRAFT_SLOW_TESTS=1 to run them)")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("logsdb-tests", master="local[8]", shuffle_partitions=8)

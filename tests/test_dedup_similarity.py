@@ -596,47 +596,6 @@ def test_oversized_bucket_emits_star_edges_and_keeps_groups(spark):
     assert all(r.id_a == 0 for r in sh_giant)
 
 
-def test_arrow_dot_bit_identical_to_hof(spark):
-    """The Arrow verify kernel must be BIT-identical to the JVM
-    ordered-fold dot — functions/arrow_kernels accumulates
-    left-to-right over the dimension axis, the same FP operation
-    sequence as aggregate(zip_with) — so swapping kernels can never
-    flip a 4-decimal rounding in a hash-gated query. Compared on raw
-    unrounded doubles over every corpus pair at sf0.001."""
-    from logsdb_spark.functions.arrow_kernels import dot_arrow
-    from logsdb_spark.functions.vectors import dot
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    a = emb.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
-    b = emb.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    rows = pairs.select(
-        "id_a", "id_b",
-        dot(F.col("va"), F.col("vb")).alias("d_hof"),
-        dot_arrow(F.col("va"), F.col("vb")).alias("d_arrow"),
-    ).collect()
-    assert rows
-    for r in rows:
-        assert r.d_hof == r.d_arrow, (r.id_a, r.id_b, r.d_hof, r.d_arrow)
-
-
-def test_ivf_verify_kernels_agree(spark):
-    """ivf_cell_near_dups(verify='arrow') output equals the default
-    JVM-fold route row-for-row (the kernel switch is a pure execution
-    strategy, not a semantics change)."""
-    from logsdb_spark.operators.similarity import ivf_cell_near_dups
-
-    emb = load_table(spark, SF_DIR, "embeddings")
-    hof = sorted(
-        map(tuple, ivf_cell_near_dups(emb, threshold=0.3).collect())
-    )
-    arrow = sorted(
-        map(tuple,
-            ivf_cell_near_dups(emb, threshold=0.3, verify="arrow").collect())
-    )
-    assert hof == arrow and hof
-
-
 def test_pq_adc_recall_floor(spark):
     """PQ/ADC (m=8 8-dim subspaces, ks=16, rerank=64) recall@10 vs
     exact measures 0.9 at sf0.01 on this near-isotropic corpus — the
@@ -1099,6 +1058,47 @@ def test_two_level_covering_probe_matches_flat(spark):
         assert two == flat
 
 
+def _two_level_block_joins(emb, cents, n_assign, coarse_probe):
+    """The r13 per-block broadcast-join form of the two-level encode —
+    the parity oracle for the folded one-row model
+    ivf_assign_with_model broadcasts. The coarse row broadcasts once,
+    then each of the ``coarse_probe`` probed coarse cells is one
+    broadcast LEFT join against the block relation (F.get: null past
+    the array end, so m < coarse_probe just probes every cell; the
+    null block is compacted away)."""
+    from logsdb_spark.operators.similarity import (
+        _topm_from,
+        _with_norm,
+        two_level_model,
+    )
+
+    coarse_row, blocks = two_level_model(cents)
+    cur = (
+        _with_norm(emb, "embedding", "_nrm")
+        .join(F.broadcast(coarse_row))
+        .select(
+            "vec_id", "embedding", "_nrm",
+            _topm_from(F.col("_coarse"), F.col("embedding"),
+                       F.col("_nrm"), coarse_probe).alias("_cc"),
+        )
+    )
+    for i in range(coarse_probe):
+        blk = blocks.select(F.col("ccell").alias(f"_bc{i}"),
+                            F.col("blk").alias(f"_blk{i}"))
+        cur = cur.join(
+            F.broadcast(blk),
+            F.get(F.col("_cc"), F.lit(i)) == F.col(f"_bc{i}"),
+            "left",
+        )
+    cands = F.flatten(F.array_compact(
+        F.array(*[F.col(f"_blk{i}") for i in range(coarse_probe)])))
+    return cur.select(
+        "vec_id",
+        F.posexplode(_topm_from(cands, F.col("embedding"), F.col("_nrm"),
+                                n_assign)).alias("rk", "cell"),
+    )
+
+
 def test_two_level_folded_lookup_matches_block_joins(spark):
     """Round-14 optimization pin: the FOLDED two-level encode (ONE
     broadcast model row — coarse array + ccell→blk map — and a per-row
@@ -1119,17 +1119,15 @@ def test_two_level_folded_lookup_matches_block_joins(spark):
         ), "cent_vec", "cnrm",
     )
 
-    def rows(fold, probe):
-        return sorted(
-            (r.vec_id, r.cell, r.rk)
-            for r in ivf_assign_with_model(
-                emb, cents, n_assign=2, coarse_probe=probe,
-                fold_blocks=fold)
-            .select("vec_id", "cell", "rk").collect()
-        )
+    def rows(df):
+        return sorted((r.vec_id, r.cell, r.rk)
+                      for r in df.select("vec_id", "cell", "rk").collect())
 
     for probe in (2, 7):
-        assert rows(True, probe) == rows(False, probe)
+        folded = ivf_assign_with_model(emb, cents, n_assign=2,
+                                       coarse_probe=probe)
+        joins = _two_level_block_joins(emb, cents, 2, probe)
+        assert rows(folded) == rows(joins)
 
 
 def test_two_level_layout_matches_inplan(spark):

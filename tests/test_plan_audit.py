@@ -170,3 +170,33 @@ def test_cohort_retention_scans_events_once(spark):
     scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
     assert len(scans) == 1, f"events scanned {len(scans)}x:\n{final}"
     assert "BroadcastExchange" not in final, final
+
+
+def test_global_row_number_reuses_one_range_exchange(spark):
+    """global_row_number's counts branch and numbering branch must see
+    the same range boundaries. No cache pins them: the executed plan
+    computes exactly ONE range-partitioning Exchange, the second
+    branch reads it back as a ReusedExchange, and no InMemoryTableScan
+    appears. (test_global_row_number_matches_sorted_enumerate checks
+    the values.)"""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from logsdb_spark.operators.ordering import global_row_number
+
+    df = spark.createDataFrame([(i % 7, i) for i in range(50)],
+                               "k long, tb long")
+    out = global_row_number(df, [F.asc("k"), F.asc("tb")],
+                            num_partitions=4)
+    out.collect()  # finalize AQE so the reuse is in the executed plan
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    nodes = [re.sub(r"^[\s:+\-]*(\*\(\d+\) )?", "", ln)
+             for ln in final.splitlines()]
+    computed = [n for n in nodes if n.startswith("Exchange rangepartitioning")]
+    reused = [n for n in nodes
+              if n.startswith("ReusedExchange") and "rangepartitioning" in n]
+    assert len(computed) == 1, final
+    assert len(reused) == 1, final
+    assert "InMemoryTableScan" not in plan, plan

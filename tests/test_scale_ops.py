@@ -807,43 +807,21 @@ def test_ivf_index_layouts_match_inplan_and_evict_stale(spark, tmp_path):
     assert all(len(a) == 1 for a in after) and after != before
 
 
-def test_parquet_row_count_and_volume_scaled_verify_width(spark, tmp_path):
-    """Round 9: layouts are tagged with their backing dir and
-    parquet_row_count reads the exact cardinality from the footers
-    (no Spark job); _verify_cosine_pairs widens its compute stage as
-    ceil(est/rows_per_task) with a core-count floor, so per-task work
-    stays bounded at 100x candidate volume."""
-    import os
-    import shutil
+def test_verify_width_is_user_specified_at_default_parallelism(spark):
+    """_verify_cosine_pairs repartitions its candidates to exactly
+    defaultParallelism on id_a: an explicit count marks the exchange
+    user-specified, so AQE cannot coalesce the compute-bound verify
+    stage down to one task."""
+    import re
 
     from pyspark.sql import functions as F
 
-    from logsdb_spark.operators.silver import (
-        ivf_assign_layout,
-        parquet_row_count,
-    )
     from logsdb_spark.operators.similarity import (
         _verify_cosine_pairs,
         _with_norm,
-        ivf_near_dups_prepared,
     )
 
-    sfd = str(tmp_path)
-    shutil.copy(
-        "/root/testdata/sf0.001/embeddings.parquet",
-        os.path.join(sfd, "embeddings.parquet"),
-    )
-    idx = ivf_assign_layout(spark, sfd)
-    n = parquet_row_count(idx)
-    assert n == idx.count()
-    # A frame that isn't a tagged layout reports None (core-count
-    # floor downstream).
-    assert parquet_row_count(idx.select("vec_id")) is None
-
-    # Width floor: tiny estimate keeps defaultParallelism; huge
-    # estimate widens the exchange.
-    dp = spark.sparkContext.defaultParallelism
-    emb = spark.read.parquet(os.path.join(sfd, "embeddings.parquet"))
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     a = _with_norm(
         emb.select(F.col("vec_id").alias("id_a"),
                    F.col("embedding").alias("va")), "va", "_na")
@@ -854,33 +832,11 @@ def test_parquet_row_count_and_volume_scaled_verify_width(spark, tmp_path):
         emb.select(F.col("vec_id").alias("id_b"))
     ).filter(F.col("id_a") < F.col("id_b")).limit(200)
 
-    def width_of(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        import re
-        m = re.search(r"RepartitionByExpression \[id_a[^\]]*\], (\d+)", plan)
-        assert m, plan
-        return int(m.group(1))
-
-    assert width_of(
-        _verify_cosine_pairs(cands, a, b, 0.0, "hof", est_candidates=10)
-    ) == dp
-    assert width_of(
-        _verify_cosine_pairs(cands, a, b, 0.0, "hof",
-                             est_candidates=100 * 200_000)
-    ) == max(dp, 100)
-
-    # End-to-end: the est-fed prepared route returns the same pairs
-    # as the un-estimated one.
-    got = sorted(
-        (r.id_a, r.id_b)
-        for r in ivf_near_dups_prepared(
-            idx, threshold=0.85, est_candidates=n * 32).collect()
-    )
-    want = sorted(
-        (r.id_a, r.id_b)
-        for r in ivf_near_dups_prepared(idx, threshold=0.85).collect()
-    )
-    assert got == want
+    plan = (_verify_cosine_pairs(cands, a, b, 0.0)
+            ._jdf.queryExecution().optimizedPlan().toString())
+    m = re.search(r"RepartitionByExpression \[id_a[^\]]*\], (\d+)", plan)
+    assert m, plan
+    assert int(m.group(1)) == spark.sparkContext.defaultParallelism
 
 
 def test_corpus_shuffle_is_deterministic_permutation(spark):
